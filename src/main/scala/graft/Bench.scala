@@ -1,4 +1,6 @@
 package graft
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark harness: times every registered query at the driver-supplied
@@ -68,69 +70,6 @@ object Bench {
     // predicate-aware persisted-index probe
     "m_media_neardup", "e_knn_ivfpq_filtered")
 
-  /** Multi-thread stream-copy probe: `threads` workers each copy a
-    * 64 MiB long array (well past any L3) `reps` times; the aggregate
-    * GB/s (read + write) is the host's effective memory bandwidth at the
-    * moment of the sample. Motivation (round-11 forensics): the roving
-    * host band showed up as a ~7% DIFFUSE inflation on bit-identical
-    * plans while the single-thread spin probe read clean — a shared-
-    * memory-bus effect a compute-bound probe cannot see. Sampled beside
-    * the spin samples, its spread makes that band attributable from the
-    * artifacts alone. */
-  private val bwThreads = 8
-  private val bwLongs = (64 << 20) / 8
-  // ADVICE r13: the probe buffers are allocated ONCE and reused across
-  // every sample (before/mid/after, plus ConcurrentBench's per-N pairs) —
-  // re-allocating 1 GiB of long arrays per sample was itself an OOM risk
-  // on smaller heaps and injected allocation+GC churn into the very
-  // gc_ms delta the bench uses for stall attribution
-  private lazy val bwPairs = {
-    val pairs = Array.fill(bwThreads)(
-      (new Array[Long](bwLongs), new Array[Long](bwLongs)))
-    pairs.foreach { case (s, d) => s(0) = 1L; d(0) = 1L; s(bwLongs - 1) = 1L }
-    pairs
-  }
-
-  /** Clean-host calibration constants for the normalization divisor —
-    * shared with [[Profile]] (and the streaming gate) so a single-query
-    * receipt normalizes exactly as the bench gate does. See the gate
-    * scaladoc below and BASELINE.md "Bench gate normalization". */
-  private[graft] val SpinRefMs = 100.0
-  private[graft] val BwRefGbps = 58.0
-
-  /** GC wall-time this JVM accumulated inside [[bwGbps]] calls — exposed
-    * so the bench can subtract the probe's own collection churn from the
-    * reported gc_ms delta (the probe must measure the host, not itself). */
-  private[graft] val bwProbeGcMs = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  private def allGcMs(): Long = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-      .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
-  }
-
-  private[graft] def bwGbps(threads: Int = bwThreads): Double = {
-    val longs = bwLongs
-    val reps = 4
-    val gc0 = allGcMs()
-    val pairs = bwPairs.take(threads)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
-    val t0 = System.nanoTime()
-    try pairs.map { case (s, d) =>
-      pool.submit(new Runnable {
-        def run(): Unit = {
-          var r = 0
-          while (r < reps) { System.arraycopy(s, 0, d, 0, longs); r += 1 }
-        }
-      })
-    }.foreach(_.get())
-    finally pool.shutdown()
-    val sec = (System.nanoTime() - t0) / 1e9
-    bwProbeGcMs.addAndGet(math.max(0L, allGcMs() - gc0))
-    // bytes touched = copies * (read + write)
-    threads.toLong * reps * longs * 8L * 2L / sec / 1e9
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // default to the host's full core count: an unset SPARK_GRAFT_CPUS
@@ -147,57 +86,27 @@ object Bench {
     // compiled before timing starts — otherwise the alphabetically-first
     // query absorbs ~4 s of one-time cost and round-over-round comparisons
     // drift with query naming.
-    Tables.all.foreach { t =>
-      try Tables.t(spark, sfDir, t).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => }
-    }
-    SparkEntry.queries.get("d_minhash_sig").foreach { fn =>
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => }
-    }
+    Measure.warmUp(spark, sfDir, "bench", Seq("d_minhash_sig"))
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
     // Option.empty = the pass threw; a crash must never report its (fast)
     // elapsed time as a steady-state min.
-    def timeOnce(pass: Int, name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
-      val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-          false
-        }
-      val dt = (System.nanoTime() - t0) / 1e9
-      System.err.println(f"[bench] pass$pass $name%-28s $dt%9.3f s${if (ok) "" else "  FAILED"}")
-      if (ok) Some(dt) else None
-    }
+    def timeOnce(pass: Int, name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] =
+      try {
+        val dt = Measure.noopSec(fn(spark, sfDir))
+        System.err.println(f"[bench] pass$pass $name%-28s $dt%9.3f s")
+        Some(dt)
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] pass$pass $name FAILED: ${e.getMessage}")
+        None
+      }
     // --- Host-noise forensics (round-7): the 2x host band has needed a
-    // prose explanation every round; these probes let the driver separate
-    // host noise from plan regression mechanically.
-    // (a) GC wall time accumulated by this JVM over the timed section.
-    def gcMs(): Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
-    }
-    // (b) Hypervisor steal from /proc/stat (ticks; field 8 after "cpu").
-    def stealTicks(): Option[(Long, Long)] =
-      scala.util.Try {
-        val toks = scala.io.Source.fromFile("/proc/stat").getLines()
-          .next().trim.split("\\s+").drop(1).map(_.toLong)
-        (toks(7), toks.sum)
-      }.toOption
-    // (c) Spin calibration: a fixed single-thread xorshift workload whose
-    // nominal time is constant — sampled before pass 1, between passes,
-    // and after the retakes, its spread IS the roving-stall band.
-    def spinMs(): Double = {
-      val t0 = System.nanoTime()
-      var x = 0x9e3779b97f4a7c15L; var i = 0
-      while (i < 50000000) { x ^= x << 13; x ^= x >>> 7; x ^= x << 17; i += 1 }
-      if (x == 42L) System.err.println("") // keep the loop live
-      (System.nanoTime() - t0) / 1e6
-    }
+    // prose explanation every round; GC wall time, hypervisor steal, and
+    // the spin + bandwidth samples taken before pass 1, between passes,
+    // and after the retakes separate host noise from plan regression
+    // mechanically.
+    import Measure.{bwGbps, gcMs, spinMs, stealTicks}
     val gc0 = gcMs()
-    val bwGc0 = bwProbeGcMs.get()
+    val bwGc0 = Measure.bwProbeGcMs.get()
     val steal0 = stealTicks()
     val spinSamples = scala.collection.mutable.ArrayBuffer(spinMs())
     val bwSamples = scala.collection.mutable.ArrayBuffer(bwGbps())
@@ -256,18 +165,11 @@ object Bench {
     // real gate. A genuine plan regression is immune by construction
     // (no retake makes a real 2x faster); only a band trip clears.
     // Worst ratios retake first; the cap bounds a fully-banded run.
-    def medianOf(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2)
-      else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
-    }
     val sfNameEarly = new java.io.File(sfDir).getName
     val bandRetaken: Map[String, Double] =
       BenchGate.load().filter(_.sf == sfNameEarly).map { r =>
         val prelimHost =
-          ((spinSamples.min / SpinRefMs).max(1.0).min(3.0) *
-            (BwRefGbps / medianOf(bwSamples.toSeq)).max(1.0).min(2.0))
-            .max(1.0).min(3.0)
+          Measure.hostRatio(spinSamples.toSeq, bwSamples.toSeq).value
         val prelimNorm = results.collect {
           case (k, Some(v)) => k -> v / prelimHost }.toMap
         BenchGate.trips(r.norms, prelimNorm).sortBy(-_.ratio).take(24)
@@ -285,7 +187,7 @@ object Bench {
     }
     // the probe's own collection churn must not masquerade as workload
     // GC in the stall-attribution delta (ADVICE r13) — report it apart
-    val probeGc = bwProbeGcMs.get() - bwGc0
+    val probeGc = Measure.bwProbeGcMs.get() - bwGc0
     val gcDelta = math.max(0L, gcMs() - gc0 - probeGc)
     val stealPct: Option[Double] = for {
       (s0, t0) <- steal0; (s1, t1) <- stealTicks() if t1 > t0
@@ -320,36 +222,18 @@ object Bench {
     // bandwidth probe"). When the dip exceeds 15% below that floor while
     // spin stays flat, consumers should read diffuse per-query inflation
     // as host band, not plan regression — mechanically, not via prose.
-    val bandSuspected = spinSamples.min / SpinRefMs <= 1.15 &&
-      bwSamples.min < 0.85 * BwRefGbps
+    val bandSuspected = spinSamples.min / Measure.SpinRefMs <= 1.15 &&
+      bwSamples.min < 0.85 * Measure.BwRefGbps
     val probe =
-      s"""{"gc_ms":$gcDelta,"probe_gc_ms":$probeGc,"steal_pct":${stealPct.map(num).getOrElse("null")},"spin_ms":[${spinSamples.map(num).mkString(",")}],"bw_gbps":[${bwSamples.map(num).mkString(",")}],"bw_ref_gbps":$BwRefGbps,"band_suspected":$bandSuspected}"""
+      s"""{"gc_ms":$gcDelta,"probe_gc_ms":$probeGc,"steal_pct":${stealPct.map(num).getOrElse("null")},"spin_ms":[${spinSamples.map(num).mkString(",")}],"bw_gbps":[${bwSamples.map(num).mkString(",")}],"bw_ref_gbps":${Measure.BwRefGbps},"band_suspected":$bandSuspected}"""
     // --- Normalized gate (round-8, bandwidth term round-14): the raw
     // s/query gate drifts with the host, so the verdict is computed
-    // against a host-normalized value.
-    // SPIN_REF_MS is the calibrated clean-host nominal of the fixed spin
-    // workload above (this hardware family: ~100 ms; see BASELINE.md
-    // "Bench gate normalization"). spin_ratio = min(spin samples) /
-    // SPIN_REF_MS — min, because per-sample stall contamination only
-    // inflates; a min above 1 means the host is SUSTAINED-slower than the
-    // calibration host, which legitimately scales every measured time.
-    // bw_ratio (round 14): the round-13 driver run graded weak purely on
-    // a bandwidth band its own probe flagged (bw 30.9-49.4 vs the 58
+    // against a host-normalized value (Measure.hostRatio has the formula
+    // and its rationale). The round-13 gated run graded weak purely on a
+    // bandwidth band its own probe flagged (bw 30.9-49.4 vs the 58
     // calibration floor) while spin_ratio (1.106) captured almost none of
-    // it — a compute-bound probe cannot see a shared-bus effect. So the
-    // bandwidth term the probe already measures is folded into the
-    // divisor exactly as spin was in round 8:
-    //   bw_ratio = clamp(BW_REF_GBPS / median(bw samples), 1, 2)
-    // MEDIAN, not min: stall contamination DEFLATES a bandwidth sample
-    // (the copy threads get starved), so the min would overstate the
-    // band; the median of the 3 samples (before / mid / after) is the
-    // sustained bus state. Capped at 2 — deeper dips than the worst band
-    // ever observed (0.53x) should stay visible, not be excused.
-    // host_ratio = clamp(spin_ratio * bw_ratio, 1, 3): the two terms
-    // measure disjoint effects by construction (the band fingerprint IS
-    // bw-dip-with-flat-spin), but the combined divisor keeps the
-    // original 3x ceiling so a doubly-degraded host can't excuse an
-    // arbitrarily slow run. The 0.55 plan budget is unchanged.
+    // it, which is why the divisor carries a bandwidth term. The 0.55
+    // plan budget is unchanged.
     // Maintenance lane (round 14): q_layout_lifecycle deliberately
     // performs ~20 real parquet WRITES (z-order -> append -> compact ->
     // recluster, each with an atomic swap) — it is the maintenance-path
@@ -364,16 +248,8 @@ object Bench {
     val maintN = finalResults.count(r => maintenanceLane(r._1))
     val computeN = finalResults.size - maintN
     val rawSpq = if (computeN > 0) (total - maintSec) / computeN else 0.0
-    val spinRatio = (spinSamples.min / SpinRefMs).max(1.0).min(3.0)
-    val bwSorted = bwSamples.sorted
-    // true median for either parity (ADVICE r14: the upper-middle element
-    // alone silently biases toward the lower-bandwidth sample whenever an
-    // even number of bw samples is ever collected)
-    val bwMedian =
-      if (bwSorted.size % 2 == 1) bwSorted(bwSorted.size / 2)
-      else (bwSorted(bwSorted.size / 2 - 1) + bwSorted(bwSorted.size / 2)) / 2.0
-    val bwRatio = (BwRefGbps / bwMedian).max(1.0).min(2.0)
-    val hostRatio = (spinRatio * bwRatio).max(1.0).min(3.0)
+    val Measure.HostRatio(spinRatio, bwMedian, bwRatio, hostRatio) =
+      Measure.hostRatio(spinSamples.toSeq, bwSamples.toSeq)
     val normSpq = rawSpq / hostRatio
     // --- Per-query regression gate (round-17): the VERDICT is now "no
     // query exceeds 2x its own committed host-normalized reference"
@@ -438,7 +314,7 @@ object Bench {
         s"${normByQ.size} measured into ${base.size} existing entries)")
     }
     val gate =
-      s"""{"raw_spq":${num(rawSpq)},"spin_ratio":${num(spinRatio)},"bw_ratio":${num(bwRatio)},"bw_median_gbps":${num(bwMedian)},"bw_ref_gbps":$BwRefGbps,"host_ratio":${num(hostRatio)},"norm_spq":${num(normSpq)},"norm_spq_same_subset":${fmt(normSpqSame)},"ledger_spq_same_subset":${fmt(ledgerSpqSame)},"diffuse_ratio":${fmt(diffuseRatio)},"same_subset_n":${sameSubset.size},"threshold":$GateSpq,"fleet_verdict":"$fleetVerdict","gate_kind":"$gateKind","ref_n":$refN,"unref_n":$unrefN,"regressions_n":${regs.size},"regressions":${BenchGate.regsJson(regs)},"suspects_n":${gateRes.suspects.size},"suspects":${BenchGate.regsJson(gateRes.suspects, 5)},"verdict":"$verdict","compute_n":$computeN,"maint_n":$maintN,"maint_sec":${num(maintSec)},"maint_lane":[${maintenanceLane.map("\"" + _ + "\"").mkString(",")}]}"""
+      s"""{"raw_spq":${num(rawSpq)},"spin_ratio":${num(spinRatio)},"bw_ratio":${num(bwRatio)},"bw_median_gbps":${num(bwMedian)},"bw_ref_gbps":${Measure.BwRefGbps},"host_ratio":${num(hostRatio)},"norm_spq":${num(normSpq)},"norm_spq_same_subset":${fmt(normSpqSame)},"ledger_spq_same_subset":${fmt(ledgerSpqSame)},"diffuse_ratio":${fmt(diffuseRatio)},"same_subset_n":${sameSubset.size},"threshold":$GateSpq,"fleet_verdict":"$fleetVerdict","gate_kind":"$gateKind","ref_n":$refN,"unref_n":$unrefN,"regressions_n":${regs.size},"regressions":${BenchGate.regsJson(regs)},"suspects_n":${gateRes.suspects.size},"suspects":${BenchGate.regsJson(gateRes.suspects, 5)},"verdict":"$verdict","compute_n":$computeN,"maint_n":$maintN,"maint_sec":${num(maintSec)},"maint_lane":[${maintenanceLane.map("\"" + _ + "\"").mkString(",")}]}"""
     val line =
       s"""{"metric":"total","value":${num(total)},"unit":"sec","n_queries":${finalResults.size},"failed":$failed,"passes":$passes,"retakes":$retakes,"host_probe":$probe,"gate":$gate,"queries":$head,"sf":"$sfDir"}"""
     // Full map for forensics/BASELINE.md (stderr + file — NOT stdout, where
@@ -459,13 +335,22 @@ object Bench {
       case (k, _) if bandRetaken.contains(k) =>
         "\"" + k + "\":" + num(bandRetaken(k))
     }.mkString("{", ",", "}")
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH_DETAIL.json"),
-      s"""{"total":${num(total)},"sf":"$sfDir","queries":$detail,"failed":$failed,"passes":$passes,"retakes":$retakes,"host_probe":$probe,"gate":$gate,"layout_stages":$layoutStages,"regressions_full":${BenchGate.regsJson(regs, Int.MaxValue)},"pass1":${mapJson(pass1.view.mapValues(identity).toMap)},"pass2":${mapJson(pass2)},"pass3":${mapJson(pass3)},"pass4":$pass4Json}""" + "\n")
-    catch { case _: Throwable => }
+    // A failed detail write is loud: the stdout line still prints (it is
+    // the run's receipt), then the run exits 1.
+    val detailPath = java.nio.file.Paths.get("BENCH_DETAIL.json")
+    val detailWritten =
+      try { java.nio.file.Files.writeString(detailPath,
+        s"""{"total":${num(total)},"sf":"$sfDir","queries":$detail,"failed":$failed,"passes":$passes,"retakes":$retakes,"host_probe":$probe,"gate":$gate,"layout_stages":$layoutStages,"regressions_full":${BenchGate.regsJson(regs, Int.MaxValue)},"pass1":${mapJson(pass1.view.mapValues(identity).toMap)},"pass2":${mapJson(pass2)},"pass3":${mapJson(pass3)},"pass4":$pass4Json}""" + "\n")
+        true
+      } catch { case NonFatal(e) =>
+        System.err.println(s"[bench] FAILED to write ${detailPath.toAbsolutePath}: $e")
+        false
+      }
     // Quiet shutdown so nothing lands after the JSON line but sbt's one
     // [success] trailer.
     spark.sparkContext.setLogLevel("ERROR")
     println(line)
     spark.stop()
+    if (!detailWritten) sys.exit(1)
   }
 }

@@ -55,25 +55,17 @@ object ConcurrentBench {
 
   private def num(d: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, d)
 
-  private def gcMs(): Long = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-      .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
-  }
+  import Measure.{bwGbps, gcMs}
 
   private def mkExec(spark: SparkSession, sfDir: String)(name: String): Unit =
-    SparkEntry.queries(name)(spark, sfDir)
-      .write.format("noop").mode("overwrite").save()
+    Measure.noop(SparkEntry.queries(name)(spark, sfDir))
 
   /** Untimed warm-up (scans + one full subset pass) and the min-of-2
     * solo baseline — shared by both modes so `throughput_x` is
     * comparable across them. */
   private def warmAndSolo(spark: SparkSession, sfDir: String): Seq[(String, Double)] = {
     val exec = mkExec(spark, sfDir) _
-    Tables.all.foreach { t =>
-      try Tables.t(spark, sfDir, t).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => }
-    }
+    Measure.warmUp(spark, sfDir, "conc")
     subset.foreach(exec)
     val solo = subset.map { name =>
       name -> (1 to 2).map { _ =>
@@ -113,9 +105,9 @@ object ConcurrentBench {
 
     val runs = streams.map { n =>
       val gc0 = gcMs()
-      val bw0 = Bench.bwGbps()
+      val bw0 = bwGbps()
       val (wall, streamSecs) = nStreams(spark, sfDir, n)
-      val bw1 = Bench.bwGbps()
+      val bw1 = bwGbps()
       val gcDelta = gcMs() - gc0
       val qps = n * subset.size / wall
       val tput = n * soloSum / wall
@@ -155,10 +147,9 @@ object ConcurrentBench {
     }
   }
 
-  private def median(xs: Seq[Long]): Long =
-    if (xs.isEmpty) -1L else xs.sorted.apply(xs.size / 2)
-  private def p95(xs: Seq[Long]): Long =
-    if (xs.isEmpty) -1L else xs.sorted.apply(math.min(xs.size - 1, (xs.size * 95) / 100))
+  /** Nearest-rank `p`-th percentile of the latencies; -1 when empty. */
+  private def pct(xs: Seq[Long], p: Int): Long =
+    if (xs.isEmpty) -1L else xs.sorted.apply(math.min(xs.size - 1, (xs.size * p) / 100))
 
   private def runMixed(spark: SparkSession, sfDir: String, args: Array[String]): Unit = {
     import org.apache.hadoop.fs.Path
@@ -201,25 +192,25 @@ object ConcurrentBench {
     val soloTo = System.currentTimeMillis()
     soloQ.stop()
     val soloWin = collector.window(soloFrom, soloTo)
-    val soloMed = median(soloWin.map(_._1))
+    val soloMed = pct(soloWin.map(_._1), 50)
     System.err.println(s"[conc-mixed] ingest solo: ${soloWin.size} batches, " +
-      s"median ${soloMed}ms, p95 ${p95(soloWin.map(_._1))}ms")
+      s"median ${soloMed}ms, p95 ${pct(soloWin.map(_._1), 95)}ms")
 
     val runs = streams.map { n =>
       val q = startIngest(s"n$n")
       Thread.sleep(5000L)
       val gc0 = gcMs()
-      val bw0 = Bench.bwGbps()
+      val bw0 = bwGbps()
       val from = System.currentTimeMillis()
       val (wall, streamSecs) = nStreams(spark, sfDir, n)
       val to = System.currentTimeMillis()
-      val bw1 = Bench.bwGbps()
+      val bw1 = bwGbps()
       val gcDelta = gcMs() - gc0
       Thread.sleep(1500L) // let the last in-flight micro-batch report
       q.stop()
       val win = collector.window(from, to)
-      val med = median(win.map(_._1))
-      val p95v = p95(win.map(_._1))
+      val med = pct(win.map(_._1), 50)
+      val p95v = pct(win.map(_._1), 95)
       val rowsDone = win.map(_._2).sum
       val achieved = if (wall > 0) rowsDone / wall else 0.0
       val qps = n * subset.size / wall
@@ -236,7 +227,7 @@ object ConcurrentBench {
     spark.streams.removeListener(collector)
     println(s"""{"metric":"concurrent_mixed","sf":"$sfDir","subset_n":${subset.size},""" +
       s""""solo_sum":${num(soloSum)},"rate_rows_per_sec":$ratePerSec,"trigger_ms":$triggerMs,""" +
-      s""""ingest_solo_ms_median":$soloMed,"ingest_solo_ms_p95":${p95(soloWin.map(_._1))},""" +
+      s""""ingest_solo_ms_median":$soloMed,"ingest_solo_ms_p95":${pct(soloWin.map(_._1), 95)},""" +
       s""""runs":[${runs.mkString(",")}]}""")
     spark.stop()
   }

@@ -24,47 +24,22 @@ object Profile {
           .sortBy(k => -k.zip(name).count { case (a, b) => a == b })
           .take(5).mkString(", "))
     val fn = SparkEntry.queries(name)
-    // the same fixed xorshift workload Bench calibrates against
-    def spinMs(): Double = {
-      val t0 = System.nanoTime()
-      var x = 0x9e3779b97f4a7c15L; var i = 0
-      while (i < 50000000) { x ^= x << 13; x ^= x >>> 7; x ^= x << 17; i += 1 }
-      if (x == 42L) System.err.println("")
-      (System.nanoTime() - t0) / 1e6
-    }
-    // untimed warm-up scan so pass 1 is plan cost, not parquet-footer
-    // cost; a table missing from sfDir is reported, not swallowed — a
-    // misconfigured directory must not silently skip the warm-up
-    Tables.all.foreach { t =>
-      try Tables.t(spark, sfDir, t).write.format("noop").mode("overwrite").save()
-      catch {
-        case e @ (_: org.apache.spark.sql.AnalysisException | _: java.io.IOException) =>
-          System.err.println(s"[profile] warm-up skipping table '$t' in $sfDir: ${e.getMessage.linesIterator.next()}")
-      }
-    }
-    // Bench's 8-thread stream-copy probe, sampled beside each pass, so a
-    // profile run yields the SAME host_ratio normalization the per-query
-    // gate applies — a Profile receipt is then directly comparable to a
-    // bench_ref.json entry (the round-18 a15 adjudication need).
+    // untimed warm-up scan so pass 1 is plan cost, not parquet-footer cost
+    Measure.warmUp(spark, sfDir, "profile")
+    // spin and bandwidth sampled beside the passes, so a profile run
+    // yields the SAME host_ratio normalization the per-query gate applies
+    // — a Profile receipt is then directly comparable to a bench_ref.json
+    // entry (the round-18 a15 adjudication need).
     val spins = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val bws = scala.collection.mutable.ArrayBuffer(Bench.bwGbps())
+    val bws = scala.collection.mutable.ArrayBuffer(Measure.bwGbps())
     val times = (1 to passes).map { i =>
-      val s0 = spinMs(); spins += s0
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9
+      val s0 = Measure.spinMs(); spins += s0
+      val dt = Measure.noopSec(fn(spark, sfDir))
       println(f"[profile] $name%-24s pass$i%-2d $dt%7.3f s   spin $s0%6.1f ms")
       dt
     }
-    bws += Bench.bwGbps()
-    // Bench's exact normalization terms (SpinRefMs/BwRefGbps/clamps)
-    val spinRatio = (spins.min / Bench.SpinRefMs).max(1.0).min(3.0)
-    val bwSorted = bws.sorted
-    val bwMedian =
-      if (bwSorted.size % 2 == 1) bwSorted(bwSorted.size / 2)
-      else (bwSorted(bwSorted.size / 2 - 1) + bwSorted(bwSorted.size / 2)) / 2.0
-    val bwRatio = (Bench.BwRefGbps / bwMedian).max(1.0).min(2.0)
-    val hostRatio = (spinRatio * bwRatio).max(1.0).min(3.0)
+    bws += Measure.bwGbps()
+    val hostRatio = Measure.hostRatio(spins.toSeq, bws.toSeq).value
     def n(d: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, d)
     println(s"""{"query":"$name","sf":"$sfDir","passes":[${times.map(n).mkString(",")}],"min":${n(times.min)},"max":${n(times.max)},"bw_gbps":[${bws.map(n).mkString(",")}],"host_ratio":${n(hostRatio)},"norm_min":${n(times.min / hostRatio)}}""")
     spark.stop()

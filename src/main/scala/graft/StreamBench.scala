@@ -26,17 +26,6 @@ object StreamBench {
     (System.nanoTime() - t0) / 1e9
   }
 
-  /** Bench's fixed spin calibration workload — sampled beside the
-    * bandwidth probe so the gate normalizes throughput with the SAME
-    * divisor terms the batch gate uses (see StreamGate's scaladoc). */
-  private def spinMs(): Double = {
-    val t0 = System.nanoTime()
-    var x = 0x9e3779b97f4a7c15L; var i = 0
-    while (i < 50000000) { x ^= x << 13; x ^= x >>> 7; x ^= x << 17; i += 1 }
-    if (x == 42L) System.err.println("")
-    (System.nanoTime() - t0) / 1e6
-  }
-
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(200000)
     val spark = Sessions.local(
@@ -50,9 +39,9 @@ object StreamBench {
     Generators.writeCsvFiles(in, seed = 42, files = 32, perFile = n / 32)
 
     // host probe bracketing the whole cell sequence (round-18 task 5):
-    // spin + bandwidth, Bench's exact normalization terms
-    val spins = scala.collection.mutable.ArrayBuffer(spinMs())
-    val bws = scala.collection.mutable.ArrayBuffer(Bench.bwGbps())
+    // spin + bandwidth, the batch gate's exact normalization terms
+    val spins = scala.collection.mutable.ArrayBuffer(Measure.spinMs())
+    val bws = scala.collection.mutable.ArrayBuffer(Measure.bwGbps())
 
     def run(name: String)(start: Jobs.Dirs => org.apache.spark.sql.streaming.StreamingQuery): (String, Double, Int) = {
       val d = Jobs.Dirs(in,
@@ -528,8 +517,8 @@ object StreamBench {
       // capstone corpus is n/10 docs for a comparable byte volume
       runCapstone(math.max(2048, n / 10)))
 
-    spins += spinMs()
-    bws += Bench.bwGbps()
+    spins += Measure.spinMs()
+    bws += Measure.bwGbps()
     val json = results.map { case (k, sec, rows) =>
       val rps = if (sec > 0) rows / sec else 0.0
       f""""$k":{"sec":$sec%.2f,"rows":$rows,"rows_per_sec":$rps%.0f}"""
@@ -538,13 +527,8 @@ object StreamBench {
     // (StreamGate's scaladoc has the contract; throughput normalizes by
     // MULTIPLYING with host_ratio — the seconds divisor, inverted)
     def num(d: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, d)
-    val spinRatio = (spins.min / Bench.SpinRefMs).max(1.0).min(3.0)
-    val bwSorted = bws.sorted
-    val bwMedian =
-      if (bwSorted.size % 2 == 1) bwSorted(bwSorted.size / 2)
-      else (bwSorted(bwSorted.size / 2 - 1) + bwSorted(bwSorted.size / 2)) / 2.0
-    val bwRatio = (Bench.BwRefGbps / bwMedian).max(1.0).min(2.0)
-    val hostRatio = (spinRatio * bwRatio).max(1.0).min(3.0)
+    val Measure.HostRatio(spinRatio, _, bwRatio, hostRatio) =
+      Measure.hostRatio(spins.toSeq, bws.toSeq)
     val normRps: Map[String, Double] = results.map { case (k, sec, rows) =>
       k -> (if (sec > 0) rows / sec * hostRatio else 0.0)
     }.toMap

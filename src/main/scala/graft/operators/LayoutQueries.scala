@@ -7,7 +7,7 @@ import graft.GQuery
 
 /** Oracle-checked registry coverage for the [[Layout]] primitives.
   *
-  * Every other layout receipt lives in sbt specs and ScaleSmoke modes;
+  * Every other layout receipt lives in sbt specs and BASELINE.md;
   * this puts the full MAINTENANCE LIFECYCLE under the driver's DuckDB
   * oracle: Z-order write -> manifest build -> incremental append ->
   * [[Layout.updateManifest]] reconcile ->
